@@ -126,8 +126,9 @@ final case class DedupConfig(
     // A/B"): the graft's correctness anchor is golden parity with the
     // reference's k-permutation signatures, and at the 450k bench corpus
     // the signature stage is 3-5% of wall so the measured 2.10x stage win
-    // (SignBench) moves total wall ~1.5%. Measured at 450k pages: OPH
-    // yields the IDENTICAL 6,149 clusters (439,874 docs vs classic's
+    // (signature stage timed alone; perfbench's kernel.sign_us_per_doc and
+    // 03_sig.cpu_s measure it now) moves total wall ~1.5%. Measured at
+    // 450k pages: OPH yields the IDENTICAL 6,149 clusters (439,874 docs vs classic's
     // 439,872) from 0.9% fewer candidate pairs, and has its own
     // end-to-end driver oracle row (q_dedup_clusters_oph). Flip to true
     // when signing dominates (short docs / high numPerm / cheap verify).

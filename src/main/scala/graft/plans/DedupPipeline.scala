@@ -56,8 +56,12 @@ object DedupPipeline {
 
   def normalizeDoc(url: String, text: String, lang: String): DocNorm = {
     val norm = TextNorm.normalize(text)
-    val toks = TextNorm.tokenize(norm)
-    DocNorm(url, norm, TextNorm.exactHash(norm), TextNorm.contentHash(norm), toks.length, lang)
+    val contentHash = TextNorm.contentHash(norm)
+    // exact_hash digests the canonical form, which is almost always the
+    // norm itself: one digest serves both then
+    val canon = TextNorm.canonicalizeExact(norm)
+    val exactHash = if (canon == norm) contentHash else TextNorm.sha256Hex(canon)
+    DocNorm(url, norm, exactHash, contentHash, TextNorm.countTokens(norm), lang)
   }
 
   def signDoc(d: DocNorm, conf: DedupConfig, as: Array[Long], bs: Array[Long],
@@ -82,12 +86,15 @@ object DedupPipeline {
 
   // ---------- stages ----------
 
-  /** Stage 1: normalize. */
+  /** Stage 1: normalize. Reads only the columns it uses, so a Parquet scan
+    * skips the `html` payload.
+    */
   def normalizeStage(spark: SparkSession, pages: Dataset[Page]): Dataset[DocNorm] = {
     import spark.implicits._
     // F1: drop empty-text docs up front (near_duplicate.py:103)
-    pages.filter(p => p.text != null && p.text.trim.nonEmpty)
-      .mapPartitions(_.map(p => normalizeDoc(p.url, p.text, p.lang)))
+    pages.select($"url", $"text", $"lang").as[(String, String, String)]
+      .filter(p => p._2 != null && p._2.trim.nonEmpty)
+      .mapPartitions(_.map { case (url, text, lang) => normalizeDoc(url, text, lang) })
   }
 
   /** Stage 2: signatures (MinHash + SimHash + hashed shingle set), with
@@ -675,6 +682,25 @@ object DedupPipeline {
     out.write(confHash.getBytes("UTF-8")); out.close()
   }
 
+  /** A stage's guard or timing counter, stored next to its output so a
+    * resumed run reports what the stage recorded when it ran.
+    */
+  private def writeCounter(spark: SparkSession, dir: String, name: String, value: Long): Unit = {
+    val out = fs(spark, dir).create(new Path(dir, s"_graft_counter_$name"), true)
+    out.write(value.toString.getBytes("UTF-8")); out.close()
+  }
+
+  /** A stored stage counter; 0 when the stage stored none. */
+  private def readCounter(spark: SparkSession, dir: String, name: String): Long = {
+    val p = new Path(dir, s"_graft_counter_$name")
+    val f = fs(spark, dir)
+    if (!f.exists(p)) 0L
+    else {
+      val in = f.open(p)
+      try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
+    }
+  }
+
   private def writeLineage(spark: SparkSession, runDir: String, runId: String, stage: String,
                            confHash: String, df: DataFrame, wallMs: Long): Unit = {
     import spark.implicits._
@@ -707,7 +733,8 @@ object DedupPipeline {
     val runId = s"run_$ch"
     val pendingLineage = scala.collection.mutable.ArrayBuffer.empty[java.util.concurrent.Future[_]]
 
-    def stage[T](name: String)(compute: => DataFrame): DataFrame = {
+    /** `counters` is read after the stage's write and stored with it. */
+    def stage(name: String, counters: () => Seq[(String, Long)] = () => Nil)(compute: => DataFrame): DataFrame = {
       val dir = s"$runDir/$name"
       if (resume && stageDone(spark, dir, ch)) {
         spark.read.parquet(dir)
@@ -727,6 +754,7 @@ object DedupPipeline {
             writeLineage(spark, runDir, runId, name, ch, written, ms)
           }
         })
+        counters().foreach { case (k, v) => writeCounter(spark, dir, k, v) }
         markStage(spark, dir, ch)
         written
       }
@@ -759,16 +787,20 @@ object DedupPipeline {
     val bandDf = stage("04_bands") { bandingStage(spark, sigs, conf).toDF() }
     val bands = bandDf.as[BandRow]
 
-    val candDf = stage("05_cand") {
-      val (pairs, droppedBuckets) = candidateStage(spark, bands, conf)
-      spark.sparkContext.setLocalProperty("graft.droppedBuckets", droppedBuckets.toString)
+    var droppedBuckets = 0L
+    val candDf = stage("05_cand", () => Seq("dropped_mega_buckets" -> droppedBuckets)) {
+      val (pairs, dropped) = candidateStage(spark, bands, conf)
+      droppedBuckets = dropped
       pairs.toDF()
     }
     val cands = candDf.as[CandPair]
 
     val embAcc = spark.sparkContext.longAccumulator("graft.verify.embNanos")
     val spanAcc = spark.sparkContext.longAccumulator("graft.verify.spanNanos")
-    val verdictDf = stage("06_verdicts") {
+    // summed task time of the per-text learners — the evidence behind the
+    // span/embedding budgets
+    def learnerMs = Seq("emb_wall_ms" -> embAcc.value / 1000000L, "span_wall_ms" -> spanAcc.value / 1000000L)
+    val verdictDf = stage("06_verdicts", () => learnerMs) {
       // repNorm, not the full norm: the span-text relations ship whole
       // through their SHUFFLE_HASH exchanges, so restricting them to
       // exact-group reps (187k of 450k rows at the scaling corpus) cuts
@@ -777,16 +809,6 @@ object DedupPipeline {
       // either way (pair urls are always reps).
       verifyStage(spark, cands, sigs, repNorm, conf, Some(embAcc), Some(spanAcc)).toDF()
     }
-    // summed task time of the per-text learners — the evidence behind the
-    // span/embedding budgets. Only set when the stage actually ran: a
-    // resumed 06_verdicts leaves the accumulators at 0 and must not clobber
-    // the measurement a cold run recorded earlier in this session (metrics
-    // snapshots are rewritten on every run() call).
-    if (embAcc.value > 0)
-      spark.sparkContext.setLocalProperty("graft.embWallMs", (embAcc.value / 1000000L).toString)
-    if (spanAcc.value > 0)
-      spark.sparkContext.setLocalProperty("graft.spanWallMs", (spanAcc.value / 1000000L).toString)
-
     val clusters = stage("07_clusters") {
       clusterStage(spark, verdictDf.as[Verdict], repsDf, conf)
     }
@@ -873,12 +895,12 @@ object DedupPipeline {
         .orderBy($"stage").collect()
         .map(r => s"""{"stage":"${r.getString(0)}","wall_ms":${r.getLong(1)},"rows":${r.getLong(2)}}""")
         .mkString("[", ",", "]")
-    val dropped = Option(spark.sparkContext.getLocalProperty("graft.droppedBuckets")).getOrElse("0")
+    val dropped = readCounter(spark, s"$runDir/05_cand", "dropped_mega_buckets")
     val summary = summaryF.get()
     val embPairs = summary.getLong(7)
     val spanPairs = summary.getLong(8)
-    val embMs = Option(spark.sparkContext.getLocalProperty("graft.embWallMs")).getOrElse("0")
-    val spanMs = Option(spark.sparkContext.getLocalProperty("graft.spanWallMs")).getOrElse("0")
+    val embMs = readCounter(spark, s"$runDir/06_verdicts", "emb_wall_ms")
+    val spanMs = readCounter(spark, s"$runDir/06_verdicts", "span_wall_ms")
     val json =
       s"""{"run_id":"$runId","config_hash":"$confHash",
          |"total_pairs":${summary.getLong(0)},"duplicates":${summary.getLong(1)},

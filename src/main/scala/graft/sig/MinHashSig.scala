@@ -39,34 +39,18 @@ object MinHashSig extends Serializable {
     (as, bs)
   }
 
-  /** Multiply a*b mod p for p = 2^61-1 without overflow, using 128-bit
-    * decomposition (a, b < 2^61).
+  /** (a*h + c) mod p for p = 2^61-1, 0 <= a, h <= 2^61 and 0 <= c < 2^61:
+    * the 128-bit product hi*2^64 + lo is (8*hi + lo/2^61)*2^61 + (lo mod
+    * 2^61) and 2^61 = 1 mod p, so three terms below 2^61 plus c need one
+    * reduction.
     */
-  @inline private def mulmod61(a: Long, b: Long): Long = {
-    val aHi = a >>> 32
-    val aLo = a & 0xFFFFFFFFL
-    val bHi = b >>> 32
-    val bLo = b & 0xFFFFFFFFL
-    // a*b = aHi*bHi*2^64 + (aHi*bLo + aLo*bHi)*2^32 + aLo*bLo
-    // Reduce mod 2^61-1 using 2^61 ≡ 1.
-    var res = modp(aLo * bLo)
-    val mid = modp(aHi * bLo) + modp(aLo * bHi) // each < p, sum < 2^62
-    // mid * 2^32 mod p
-    res = modp(res + mulPow2(modp(mid), 32))
-    res = modp(res + mulPow2(modp(aHi * bHi), 64))
-    res
+  @inline private[graft] def mulAddMod61(a: Long, h: Long, c: Long): Long = {
+    val lo = a * h
+    modp((lo & MersennePrime) + ((Math.multiplyHigh(a, h) << 3) | (lo >>> 61)) + c)
   }
 
-  /** (x * 2^k) mod p for p = 2^61-1, 0 <= x < p, 0 <= k <= 64. */
-  @inline private def mulPow2(x: Long, k: Int): Long = {
-    // rotate within 61 bits: x * 2^k mod (2^61-1) = 61-bit rotation
-    val kk = k % 61
-    val hi = x >>> (61 - kk)
-    val lo = (x << kk) & MersennePrime
-    modp(lo + hi)
-  }
-
-  @inline private def modp(x: Long): Long = {
+  /** x mod p for x read as unsigned 64-bit. */
+  @inline private[graft] def modp(x: Long): Long = {
     var v = (x & MersennePrime) + (x >>> 61)
     if (v >= MersennePrime) v -= MersennePrime
     v
@@ -77,13 +61,24 @@ object MinHashSig extends Serializable {
     * with real ones because their signature is a deterministic constant).
     */
   def signature(shingleHashes: Array[Long], as: Array[Long], bs: Array[Long]): Array[Long] = {
-    val k = as.length
-    val sig = new Array[Long](k)
-    java.util.Arrays.fill(sig, MersennePrime - 1)
+    val hs = new Array[Long](shingleHashes.length)
     var j = 0
-    while (j < shingleHashes.length) {
-      update(sig, shingleHashes(j), as, bs)
-      j += 1
+    while (j < hs.length) { hs(j) = modp(shingleHashes(j)); j += 1 }
+    // permutation-major: each permutation's minimum stays in a register
+    val sig = new Array[Long](as.length)
+    var i = 0
+    while (i < sig.length) {
+      val a = as(i)
+      val b = bs(i)
+      var min = MersennePrime - 1
+      j = 0
+      while (j < hs.length) {
+        val v = mulAddMod61(a, hs(j), b)
+        if (v < min) min = v
+        j += 1
+      }
+      sig(i) = min
+      i += 1
     }
     sig
   }
@@ -96,14 +91,14 @@ object MinHashSig extends Serializable {
   }
 
   /** In-place per-element signature update — the streaming/aggregator
-    * form; `signature` above is a fold of this, so per-doc and per-group
+    * form; `signature` above equals a fold of this, so per-doc and per-group
     * sketches are interchangeable.
     */
   def update(sig: Array[Long], elementHash: Long, as: Array[Long], bs: Array[Long]): Unit = {
     val h = modp(elementHash) // modp treats its input as unsigned 64-bit
     var i = 0
     while (i < sig.length) {
-      val v = modp(mulmod61(as(i), h) + bs(i))
+      val v = mulAddMod61(as(i), h, bs(i))
       if (v < sig(i)) sig(i) = v
       i += 1
     }

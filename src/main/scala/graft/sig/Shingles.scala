@@ -1,7 +1,7 @@
 package graft.sig
 
 import graft.DedupConfig
-import graft.hash.XXH64
+import graft.hash.{Utf8Buffer, XXH64}
 import graft.norm.TextNorm
 
 /** Hashed k-shingle derivation — the single source of truth for the
@@ -23,9 +23,14 @@ object Shingles {
 
   /** Sorted distinct xxh64 hashes of the word k-shingles of `toks`. */
   def fromTokens(toks: Array[String], k: Int): Array[Long] = {
+    val utf8 = new Utf8Buffer
     val tokHashes = new Array[Long](toks.length)
     var i = 0
-    while (i < toks.length) { tokHashes(i) = XXH64.hashString(toks(i), HashSeed); i += 1 }
+    while (i < toks.length) {
+      val len = utf8.encode(toks(i))
+      tokHashes(i) = XXH64.hash(utf8.bytes, 0, len, HashSeed)
+      i += 1
+    }
     val nSh = if (k <= 1) toks.length else math.max(0, toks.length - k + 1)
     val hashes = new Array[Long](nSh)
     i = 0
@@ -33,7 +38,19 @@ object Shingles {
       hashes(i) = if (k <= 1) tokHashes(i) else XXH64.hashLongs(tokHashes, i, i + k, k.toLong)
       i += 1
     }
-    hashes.distinct.sorted
+    sortedDistinct(hashes)
+  }
+
+  /** Sort `xs` in place (signed order) and return its distinct values. */
+  private[graft] def sortedDistinct(xs: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(xs)
+    var m = 0
+    var i = 0
+    while (i < xs.length) {
+      if (m == 0 || xs(i) != xs(m - 1)) { xs(m) = xs(i); m += 1 }
+      i += 1
+    }
+    if (m == xs.length) xs else java.util.Arrays.copyOf(xs, m)
   }
 
   /** The signature stage's exact token chain (text_preproc.py:126-151 via

@@ -81,6 +81,29 @@ class ResumeSpec extends AnyFunSuite {
     } finally prev.foreach(spark.sparkContext.setCheckpointDir)
   }
 
+  test("a resumed run reports the counters its own stages recorded") {
+    val dirA = "/tmp/graft_test_resume_counters_a"
+    val dirB = "/tmp/graft_test_resume_counters_b"
+    TestUtil.deleteRecursively(new File(dirA))
+    TestUtil.deleteRecursively(new File(dirB))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def counters(dir: String): Seq[Long] = {
+      val m = mapper.readTree(new File(s"$dir/metrics.json"))
+      Seq("dropped_mega_buckets", "emb_wall_ms", "span_wall_ms").map(k => m.get(k).asLong())
+    }
+    // a tiny bucket cap makes run A drop buckets; run B drops none
+    val confA = DedupConfig.balanced.copy(maxBucketSize = 2)
+    DedupPipeline.run(spark, pagesDs, dirA, confA, resume = true).count()
+    val a = counters(dirA)
+    assert(a.head > 0, "run A should drop mega-buckets")
+    DedupPipeline.run(spark, pagesDs, dirB, DedupConfig.balanced, resume = true).count()
+    assert(counters(dirB).head == 0)
+    val candTimes = partMtimes(s"$dirA/05_cand")
+    DedupPipeline.run(spark, pagesDs, dirA, confA, resume = true).count()
+    assert(partMtimes(s"$dirA/05_cand") == candTimes, "05_cand was recomputed on resume")
+    assert(counters(dirA) == a, "resumed run A must report the counters A's stages recorded")
+  }
+
   test("config change invalidates stage outputs") {
     val dir = "/tmp/graft_test_resume_conf"
     TestUtil.deleteRecursively(new File(dir))
