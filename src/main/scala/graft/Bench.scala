@@ -189,17 +189,11 @@ object ScalingBench {
   }
 
 
-  /** Scaling-bench config: SPARK_GRAFT_PREFILTER=1 turns on the verify
-    * MinHash-estimate prefilter (DedupConfig.estPrefilter Scaladoc) — the
-    * shuffle-byte knob whose payoff regime is exactly the multi-executor
-    * heavy-pair corpus this bench builds. Labels/clusters are asserted
-    * identical on/off (EntryQueriesSpec).
+  /** Scaling-bench config: DedupConfig.balanced with the density and
+    * signer levers switched by environment variables.
     */
   def benchConf: graft.DedupConfig = {
     var base = DedupConfig.balanced
-    if (sys.env.get("SPARK_GRAFT_PREFILTER").contains("1")) base = base.copy(estPrefilter = true)
-    // SPARK_GRAFT_COGROUP=0 forces the join dataflow for A/B measurement
-    sys.env.get("SPARK_GRAFT_COGROUP").foreach(v => base = base.copy(verifyCoGroup = v == "1"))
     // SPARK_GRAFT_BOILER_FRAC=<f> turns on corpus-level boilerplate shingle
     // suppression (sig/Boilerplate) — the density lever; pair with
     // SPARK_GRAFT_TEMPLATE_TOKENS for the planted-template A/B
@@ -209,9 +203,6 @@ object ScalingBench {
     // hashing (sig/Oph) — the signing-CPU lever for the default-config
     // decision measured in BENCH/BASELINE.md (classic vs OPH vs OPH+bbit)
     sys.env.get("SPARK_GRAFT_SIGNER").foreach(v => base = base.copy(signerOph = v == "oph"))
-    // SPARK_GRAFT_BBIT=1 turns on the b-bit packed-signature verify
-    // prefilter (DedupConfig.bbitPrefilter Scaladoc)
-    if (sys.env.get("SPARK_GRAFT_BBIT").contains("1")) base = base.copy(bbitPrefilter = true)
     base
   }
 

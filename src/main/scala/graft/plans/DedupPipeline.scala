@@ -6,10 +6,10 @@ import graft.hash.XXH64
 import graft.lsh.LshParams
 import graft.model.Schemas._
 import graft.norm.TextNorm
-import graft.sa.SuffixLCS
+import graft.sa.SuffixAutomaton
 import graft.sig.{CheapEmbed, MinHashSig, SimHash}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end near-duplicate detection + clustering pipeline.
@@ -23,10 +23,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes:
   *  - Signatures carry HASHED shingle sets (sorted distinct xxh64), not
-  *    shingle strings — pair verification is a merge-count. The pair join
-  *    itself ships only fixed-width signature columns; the size-unbounded
-  *    shingle arrays join in only for the estimate-uncertainty band
-  *    (verifyStage Scaladoc).
+  *    shingle strings — pair verification is a merge-count over the
+  *    arrays the pair join attaches (verifyStage Scaladoc).
   *  - The embedding learner only decides pairs where exactly need-1 of the
   *    other votes fired (arbiter consensus is monotone), so embeddings are
   *    computed for that small pair subset only, never for the whole corpus.
@@ -262,18 +260,19 @@ object DedupPipeline {
   }
 
   /** Stage 5: verify + decide. Pure column math for the two signature
-    * learners; embedding + suffix-array span pass computed only for the
+    * learners; embedding + suffix-automaton span pass computed only for the
     * pair subset whose outcome depends on them.
     *
-    * Shuffle-payload design: the first pair join carries only fixed-width
-    * columns (the numPerm-long minhash signature, simhash words, exact
-    * hash) — the size-unbounded hashed-shingle arrays are joined ONLY for
-    * pairs whose signature-equality estimate lands inside the
-    * (estSkipLow, estSkipHigh) uncertainty band around the vote threshold.
-    * Out-of-band pairs use the estimate as their jaccard score (the
-    * reference's own estimate semantics, minhash_model.py:483-487);
-    * in-band pairs get the exact merge-count Jaccard, so every decision
-    * near the threshold is exact.
+    * Dataflow: one decision per candidate pair. The pairs join the
+    * doc-keyed signature relation twice (a side, then b side) with
+    * SHUFFLE_HASH hints, carrying the hashed shingle arrays, exact hash and
+    * simhash words; every pair gets the exact merge-count Jaccard, the
+    * exact-hash equality and the SimHash Hamming distance. The scored
+    * relation is checkpointed narrow (~100 B/row) and feeds the embedding
+    * and span subsets, which each end in a fixed-width (a, b, score)
+    * relation left-joined back onto it. A cogroup scorer and MinHash-
+    * estimate prefilters (full-width and b-bit) lost to this shape on wall
+    * and exchange bytes (BENCH/BASELINE.md).
     */
   def verifyStage(spark: SparkSession, cands: Dataset[CandPair], sigs: Dataset[DocSig],
                   norm: Dataset[DocNorm], conf: DedupConfig,
@@ -293,94 +292,23 @@ object DedupPipeline {
     val hammingCol = (bit_count($"a_hi".bitwiseXOR($"b_hi")) +
       bit_count($"a_lo".bitwiseXOR($"b_lo"))).as("hamming")
 
-    require(Seq(conf.verifyCoGroup, conf.estPrefilter, conf.bbitPrefilter).count(identity) <= 1,
-      "verifyCoGroup / estPrefilter / bbitPrefilter select conflicting verify dataflows - enable at most one")
-    val anyPrefilter = conf.estPrefilter || conf.bbitPrefilter
-    val scored: DataFrame = if (conf.verifyCoGroup) {
-      coGroupScore(spark, cands, sigs, conf)
-    } else if (!anyPrefilter) {
-      // Default: single pair join carrying the shingle arrays once.
-      // Measured faster whenever the estimate-skip fraction is low or the
-      // pairs side is broadcastable (every sandbox corpus; see
-      // DedupConfig.estPrefilter).
-      val sa = sigs.select($"url".as("a_url"), $"shingles".as("a_sh"),
-        $"exact_hash".as("a_eh"), $"simhash_hi".as("a_hi"), $"simhash_lo".as("a_lo"))
-      val sb = sigs.select($"url".as("b_url"), $"shingles".as("b_sh"),
-        $"exact_hash".as("b_eh"), $"simhash_hi".as("b_hi"), $"simhash_lo".as("b_lo"))
-      // SHUFFLE_HASH: sort-merge would SORT the array-carrying relations —
-      // at the 150k-page bench that is two sorts of ~2.4 GB of fat rows per
-      // join, the verify stage's dominant CPU once the span pass went
-      // linear. Hash-join streams the pairs side instead; the build side is
-      // the per-partition slice of the doc-keyed sig relation (~tens of MB).
-      cands.toDF()
-        .join(sa.hint("SHUFFLE_HASH"), $"a" === $"a_url")
-        .join(sb.hint("SHUFFLE_HASH"), $"b" === $"b_url")
-        .withColumn("exact", $"a_eh" === $"b_eh")
-        .withColumn("jaccard", jaccardCol("a_sh", "b_sh"))
-        .withColumn("jaccard_est", lit(false))
-        .withColumn("hamming", hammingCol)
-        .withColumn("sim_sim", greatest(lit(0.0), lit(1.0) - $"hamming" / lit(bits.toDouble)))
-        .select($"a", $"b", $"exact", $"jaccard", $"jaccard_est", $"hamming", $"sim_sim")
-    } else {
-      // Prefilter dataflow: the pair join ships only fixed-width columns;
-      // the size-unbounded shingle arrays join in for the estimate-
-      // uncertainty band only, and the skip/exact branches are unioned
-      // (no join-back shuffle). bbitPrefilter ships the 4-bit packed
-      // signature (5 longs, 40 B) instead of the full 64-long array and
-      // widens the band by bbitBandMargin (DedupConfig scaladoc).
-      val mhCol: Column = if (conf.bbitPrefilter)
-        graft.sig.BBitMinHash.packExpr("minhash", conf.numPerm) else $"minhash"
-      val sa = sigs.select($"url".as("a_url"), mhCol.as("a_mh"), $"n_shingles".as("a_nsh"),
-        $"exact_hash".as("a_eh"), $"simhash_hi".as("a_hi"), $"simhash_lo".as("a_lo"))
-      val sb = sigs.select($"url".as("b_url"), mhCol.as("b_mh"), $"n_shingles".as("b_nsh"),
-        $"exact_hash".as("b_eh"), $"simhash_hi".as("b_hi"), $"simhash_lo".as("b_lo"))
-      // signature-equality estimate (codegen'd higher-order fns, no UDF);
-      // the b-bit form applies the collision correction so both modes
-      // estimate the SAME quantity (Jaccard), just at different noise
-      val estCol: Column = if (conf.bbitPrefilter) {
-        val n = conf.numPerm
-        greatest(lit(0.0),
-          (graft.sig.BBitMinHash.matchCountExpr("a_mh", "b_mh", n) * lit(16.0) - lit(n.toDouble)) /
-            lit(n * 15.0))
-      } else expr(
-        "size(filter(zip_with(a_mh, b_mh, (x, y) -> x = y), v -> v)) / CAST(size(a_mh) AS DOUBLE)")
-      val skipLow = if (conf.bbitPrefilter) conf.estSkipLow - conf.bbitBandMargin else conf.estSkipLow
-      val skipHigh = if (conf.bbitPrefilter) conf.estSkipHigh + conf.bbitBandMargin else conf.estSkipHigh
-      val pre = cands.toDF()
-        .join(sa, $"a" === $"a_url").join(sb, $"b" === $"b_url")
-        .withColumn("exact", $"a_eh" === $"b_eh")
-        .withColumn("est", estCol)
-        .withColumn("hamming", hammingCol)
-        .withColumn("sim_sim", greatest(lit(0.0), lit(1.0) - $"hamming" / lit(bits.toDouble)))
-        // empty shingle sets carry sentinel signatures (est 1.0 vs another
-        // empty set) — always resolve those exactly (jaccardSorted: both
-        // empty -> 0.0, the reference's _jaccard_from_sets)
-        .withColumn("need_exact_j", !$"exact" &&
-          (($"est" > skipLow && $"est" < skipHigh) ||
-            $"a_nsh" === 0 || $"b_nsh" === 0))
-        .select($"a", $"b", $"exact", $"est", $"hamming", $"sim_sim",
-          $"need_exact_j", $"a_nsh", $"b_nsh")
-        // narrow pairs-sized relation (~100B/row); checkpointing lets the
-        // two branches split WITHOUT re-running the pair join (and, unlike
-        // persist, local blocks are reclaimed by the ContextCleaner when
-        // the plan goes out of scope — no session-lifetime cache leak)
-        .transform(d => ckpt(spark, d, conf))
-      val ja = sigs.select($"url".as("ja_url"), $"shingles".as("ja_sh"))
-      val jb = sigs.select($"url".as("jb_url"), $"shingles".as("jb_sh"))
-      val skipBranch = pre.filter(!$"need_exact_j")
-        .withColumn("jaccard",
-          when($"exact", when($"a_nsh" === 0 && $"b_nsh" === 0, 0.0).otherwise(1.0))
-            .otherwise($"est"))
-        // exact pairs get the definitionally-exact 1.0/0.0, not an estimate
-        .withColumn("jaccard_est", !$"exact")
-      val exactBranch = pre.filter($"need_exact_j")
-        .join(ja.hint("SHUFFLE_HASH"), $"a" === $"ja_url")
-        .join(jb.hint("SHUFFLE_HASH"), $"b" === $"jb_url")
-        .withColumn("jaccard", jaccardCol("ja_sh", "jb_sh"))
-        .withColumn("jaccard_est", lit(false))
-      val cols = Seq($"a", $"b", $"exact", $"jaccard", $"jaccard_est", $"hamming", $"sim_sim")
-      skipBranch.select(cols: _*).unionByName(exactBranch.select(cols: _*))
-    }
+    val sa = sigs.select($"url".as("a_url"), $"shingles".as("a_sh"),
+      $"exact_hash".as("a_eh"), $"simhash_hi".as("a_hi"), $"simhash_lo".as("a_lo"))
+    val sb = sigs.select($"url".as("b_url"), $"shingles".as("b_sh"),
+      $"exact_hash".as("b_eh"), $"simhash_hi".as("b_hi"), $"simhash_lo".as("b_lo"))
+    // SHUFFLE_HASH: sort-merge would SORT the array-carrying relations —
+    // at the 150k-page bench that is two sorts of ~2.4 GB of fat rows per
+    // join, the verify stage's dominant CPU once the span pass went
+    // linear. Hash-join streams the pairs side instead; the build side is
+    // the per-partition slice of the doc-keyed sig relation (~tens of MB).
+    val scored: DataFrame = cands.toDF()
+      .join(sa.hint("SHUFFLE_HASH"), $"a" === $"a_url")
+      .join(sb.hint("SHUFFLE_HASH"), $"b" === $"b_url")
+      .withColumn("exact", $"a_eh" === $"b_eh")
+      .withColumn("jaccard", jaccardCol("a_sh", "b_sh"))
+      .withColumn("hamming", hammingCol)
+      .withColumn("sim_sim", greatest(lit(0.0), lit(1.0) - $"hamming" / lit(bits.toDouble)))
+      .select($"a", $"b", $"exact", $"jaccard", $"hamming", $"sim_sim")
 
     // base is consumed by FOUR subtrees (span subset, emb subset, the
     // final left join, and the window budget): checkpointing materializes
@@ -393,20 +321,20 @@ object DedupPipeline {
       .withColumn("vote_sim", $"sim_sim" >= conf.thrSimhash)
       .withColumn("vote_min", $"jaccard" >= conf.thrMinhash)
       .withColumn("votes_base", $"vote_sim".cast("int") + $"vote_min".cast("int"))
-      .select($"a", $"b", $"exact", $"jaccard", $"jaccard_est", $"hamming", $"sim_sim",
+      .select($"a", $"b", $"exact", $"jaccard", $"hamming", $"sim_sim",
         $"vote_sim", $"vote_min", $"votes_base"), conf)
 
     val need = conf.requiredVotes
 
     // Subset that still needs per-text work: embedding tiebreak and/or the
-    // suffix-array span pass.
+    // shared-span pass.
     val needEmb = !$"exact" && lit(conf.embedEnabled) && ($"votes_base" === (need - 1))
     val wouldBeNonDup = !$"exact" && ($"votes_base" < need) &&
       !(lit(conf.embedEnabled) && $"votes_base" === (need - 1))
     val needSpan = lit(conf.spanPassEnabled) &&
       ($"jaccard" >= conf.spanCandidateMinJaccard) && (needEmb || wouldBeNonDup)
 
-    // the SA pass is advisory (spanAsDuplicate off = parity) — budget it
+    // the span pass is advisory (spanAsDuplicate off = parity) — budget it
     // per doc so boilerplate-heavy corpora can't drown the verify stage
     val spanW = org.apache.spark.sql.expressions.Window
       .partitionBy($"a").orderBy($"jaccard".desc, $"b")
@@ -418,19 +346,14 @@ object DedupPipeline {
     // Opt-in per-doc embedding budget (DedupConfig.embMaxPairsPerDoc): keep
     // each anchor doc's `cap` highest-jaccard gray-zone pairs for the
     // embedding pass; the rest resolve with vote_emb = false (emb_cos stays
-    // null). Same anchor/window convention as the span budget. Drops are
-    // counted (one extra job, opted-in runs only) and logged.
+    // null). Same anchor/window convention as the span budget. `run` counts
+    // the drops from the written verdicts (embBudgetDrops).
     val subBudget = conf.embMaxPairsPerDoc match {
       case None => subPre
       case Some(cap) =>
-        val d0 = subPre
+        subPre
           .withColumn("emb_rn", sum(when($"do_emb", 1).otherwise(0)).over(cumW))
-        val dropped = d0.filter($"do_emb" && $"emb_rn" > cap).count()
-        val d = d0.withColumn("do_emb", $"do_emb" && $"emb_rn" <= cap)
-        if (dropped > 0)
-          System.err.println(s"[graft.pipeline] emb budget dropped $dropped gray-zone pairs (> $cap per doc)")
-        spark.sparkContext.setLocalProperty("graft.pipeline.embBudgetDropped", dropped.toString)
-        d
+          .withColumn("do_emb", $"do_emb" && $"emb_rn" <= cap)
     }
     val subset = subBudget
       .filter($"do_emb" || $"do_span")
@@ -497,33 +420,22 @@ object DedupPipeline {
       }.toDF("ea_", "eb_", "emb_cos")
     // Texts are capped to spanMaxTextChars IN the projection, so the pair
     // shuffle never carries bytes the suffix automaton won't read. No
-    // explicit repartition on the automaton path: the pass is byte-normal
-    // (~0.2ms/pair), AQE's size-based partitioning spreads it fine — the
-    // old repartition(2x parallelism) round-tripped the full pair+text
-    // relation (2.8 GB at the 150k-page bench) to protect a CPU profile
-    // the suffix-array path no longer has (spanViaAutomaton=false keeps it).
+    // explicit repartition: the pass is byte-normal (~0.2ms/pair) and AQE's
+    // size-based partitioning spreads it fine.
     val na = norm.select($"url".as("na_url"),
       substring($"norm_text", 1, spanCap).as("a_text"))
     val nb = norm.select($"url".as("nb_url"),
       substring($"norm_text", 1, spanCap).as("b_text"))
-    val spanWithTexts = subset.filter($"do_span").select($"a", $"b")
+    val spanScored: DataFrame = subset.filter($"do_span").select($"a", $"b")
       .join(na.hint("SHUFFLE_HASH"), $"a" === $"na_url")
       .join(nb.hint("SHUFFLE_HASH"), $"b" === $"nb_url")
       .select($"a", $"b", $"a_text", $"b_text")
       .as[(String, String, String, String)]
-    val spanBase =
-      if (conf.spanViaAutomaton) spanWithTexts
-      else spanWithTexts.repartition(spark.sparkContext.defaultParallelism * 2)
-    val spanScored: DataFrame = spanBase
       .mapPartitions { it =>
-        val useAutomaton = conf.spanViaAutomaton
-        val ws = if (useAutomaton) null else new SuffixLCS.Workspace(2 * spanCap + 1)
-        val wsAuto = if (useAutomaton) new graft.sa.SuffixAutomaton.Workspace(spanCap) else null
+        val ws = new SuffixAutomaton.Workspace(spanCap)
         it.map { case (a, b, at, bt) =>
           val t0 = System.nanoTime()
-          val span =
-            if (useAutomaton) graft.sa.SuffixAutomaton.lcs(at, bt, wsAuto)
-            else SuffixLCS.longestCommonSubstring(at, bt, ws)
+          val span = SuffixAutomaton.lcs(at, bt, ws)
           spanNanos.foreach(_.add(System.nanoTime() - t0))
           (a, b, span)
         }
@@ -561,86 +473,12 @@ object DedupPipeline {
     labeled.select($"a", $"b",
         when($"a" <= $"b", concat($"a", lit("||"), $"b"))
           .otherwise(concat($"b", lit("||"), $"a")).as("pair_key"),
-        $"exact", $"jaccard", $"jaccard_est", $"hamming", $"sim_sim", $"emb_cos",
+        $"exact", $"jaccard", $"hamming", $"sim_sim", $"emb_cos",
         ($"exact" || $"vote_sim").as("vote_sim"),
         ($"exact" || $"vote_min").as("vote_min"),
         ($"exact" || $"vote_emb").as("vote_emb"),
         $"votes", $"shared_span_len", $"final_label", $"dup_kind", $"reason")
       .as[Verdict]
-  }
-
-  /** Partition-aware pair scorer (DedupConfig.verifyCoGroup) — the same
-    * (a, b, exact, jaccard, jaccard_est, hamming, sim_sim) relation as the
-    * join dataflow, with array shuffle bytes decoupled from PAIR count.
-    *
-    * Dataflow: pairs hash-route to partition pid(a); the needed doc
-    * payloads (exact hash, sorted hashed shingles, simhash words) ship
-    * once per DISTINCT (doc, target-partition) — computed as a distinct
-    * (url, part) need-set joined once against the signature relation —
-    * and one groupByKey co-locates payloads with pairs, which are scored
-    * in-partition against a hash map of the local payload slice (the same
-    * memory a SHUFFLE_HASH build side would hold; pairs buffer narrow at
-    * ~100 B/row until the map is complete, since group iterator order is
-    * unspecified).
-    *
-    * Why: in the join dataflow the second pair join re-shuffles pairs WITH
-    * the first doc's shingle array attached — one array copy per PAIR.
-    * At pairs/doc >> partitions (the heavy web regime: 15.8M pairs over
-    * 450k docs at the scaling bench) that term dominates every exchange;
-    * here a doc's array crosses the wire at most (1 + partitions touched
-    * by its pairs) times regardless of how many pairs it is in.
-    */
-  private def coGroupScore(spark: SparkSession, cands: Dataset[CandPair],
-                           sigs: Dataset[DocSig], conf: DedupConfig): DataFrame = {
-    import spark.implicits._
-    // Route keys >> reducer count: with nKeys == reducers, balls-in-bins
-    // puts 3-4 whole route-groups on one reducer (~3x stage skew). A 16x
-    // key space costs almost nothing extra — a doc's a-side pairs all
-    // share ONE key regardless (pid depends only on a), and its b-side
-    // duplication is bounded by its pair degree, not by the key count —
-    // while letting the hash spread groups evenly over reducers.
-    val nParts = spark.sessionState.conf.numShufflePartitions * 16
-    val bits = conf.simhashBits
-    def pidCol(c: org.apache.spark.sql.Column) = pmod(xxhash64(c), lit(nParts)).cast("int")
-
-    val sigSlim = sigs.toDF()
-      .select($"url", $"exact_hash", $"shingles", $"simhash_hi", $"simhash_lo")
-    val need = cands.toDF().select($"a".as("url"), pidCol($"a").as("part"))
-      .union(cands.toDF().select($"b".as("url"), pidCol($"a").as("part")))
-      .distinct()
-    // one array shuffle: payloads keyed by url meet the need-set, then
-    // route to their target partitions (|need| rows, not |pairs|)
-    val shipped = need.join(sigSlim.hint("SHUFFLE_HASH"), "url")
-      .select($"part", $"url", $"exact_hash", $"shingles",
-        $"simhash_hi", $"simhash_lo", lit(null).cast("string").as("b"))
-    val pairRows = cands.toDF().select(pidCol($"a").as("part"), $"a".as("url"),
-      lit(null).cast("string").as("exact_hash"),
-      lit(null).cast("array<bigint>").as("shingles"),
-      lit(0L).as("simhash_hi"), lit(0L).as("simhash_lo"), $"b")
-    val all = shipped.unionByName(pairRows)
-      .as[(Int, String, String, Array[Long], Long, Long, String)]
-    all.groupByKey(_._1).flatMapGroups { (_, it) =>
-      val docs = new java.util.HashMap[String, (String, Array[Long], Long, Long)]()
-      val pending = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      it.foreach {
-        case (_, url, eh, sh, hi, lo, null) => docs.put(url, (eh, sh, hi, lo))
-        case (_, a, _, _, _, _, b) => pending += ((a, b))
-      }
-      pending.iterator.flatMap { case (a, b) =>
-        val da = docs.get(a)
-        val db = docs.get(b)
-        if (da == null || db == null) Iterator.empty // mirror the inner join
-        else {
-          val ham = java.lang.Long.bitCount(da._3 ^ db._3) +
-            java.lang.Long.bitCount(da._4 ^ db._4)
-          Iterator.single((a, b, da._1 == db._1,
-            graft.sig.MinHashSig.jaccardSorted(da._2, db._2), ham))
-        }
-      }
-    }.toDF("a", "b", "exact", "jaccard", "hamming")
-      .withColumn("jaccard_est", lit(false))
-      .withColumn("sim_sim", greatest(lit(0.0), lit(1.0) - $"hamming" / lit(bits.toDouble)))
-      .select($"a", $"b", $"exact", $"jaccard", $"jaccard_est", $"hamming", $"sim_sim")
   }
 
   /** Stage 6: clustering. CC runs ONLY over the rep-level near-duplicate
@@ -701,6 +539,22 @@ object DedupPipeline {
     }
   }
 
+  /** Gray-zone pairs the per-doc embedding budget left unembedded, counted
+    * from the written verdicts: a non-exact pair one signature vote short
+    * of consensus takes the embedding tiebreak, so a null `emb_cos` there
+    * is a budget drop. Logged when non-zero.
+    */
+  private def embBudgetDrops(verdicts: DataFrame, conf: DedupConfig): Long = {
+    val dropped =
+      if (!conf.embedEnabled) 0L
+      else verdicts.filter(!col("exact") && col("emb_cos").isNull &&
+        col("vote_sim").cast("int") + col("vote_min").cast("int") === conf.requiredVotes - 1).count()
+    if (dropped > 0)
+      System.err.println(s"[graft.pipeline] emb budget dropped $dropped gray-zone pairs " +
+        s"(> ${conf.embMaxPairsPerDoc.getOrElse(0)} per doc)")
+    dropped
+  }
+
   private def writeLineage(spark: SparkSession, runDir: String, runId: String, stage: String,
                            confHash: String, df: DataFrame, wallMs: Long): Unit = {
     import spark.implicits._
@@ -733,11 +587,27 @@ object DedupPipeline {
     val runId = s"run_$ch"
     val pendingLineage = scala.collection.mutable.ArrayBuffer.empty[java.util.concurrent.Future[_]]
 
-    /** `counters` is read after the stage's write and stored with it. */
-    def stage(name: String, counters: () => Seq[(String, Long)] = () => Nil)(compute: => DataFrame): DataFrame = {
+    def writeLineageAsync(name: String, df: DataFrame, ms: Long): Unit =
+      pendingLineage += lineagePool.submit(new Runnable {
+        def run(): Unit = {
+          spark.sparkContext.setJobDescription(s"pipeline: lineage $name")
+          writeLineage(spark, runDir, runId, name, ch, df, ms)
+        }
+      })
+
+    /** `counters` reads the written output and is stored with it, next to
+      * the stage wall (`wall_ms`), which rebuilds lost lineage on resume.
+      */
+    def stage(name: String, counters: DataFrame => Seq[(String, Long)] = _ => Nil)
+             (compute: => DataFrame): DataFrame = {
       val dir = s"$runDir/$name"
       if (resume && stageDone(spark, dir, ch)) {
-        spark.read.parquet(dir)
+        val done = spark.read.parquet(dir)
+        // a crash after the stage marker but before its async lineage
+        // write finished leaves no lineage: rebuild it from the output
+        if (!fs(spark, runDir).exists(new Path(s"$runDir/lineage/$name/_SUCCESS")))
+          writeLineageAsync(name, done, readCounter(spark, dir, "wall_ms"))
+        done
       } else {
         // label every job this stage triggers (incl. eager checkpoints
         // inside the stage computation) — guide §1.5
@@ -748,13 +618,8 @@ object DedupPipeline {
           spark.read.parquet(dir)
         } finally spark.sparkContext.setJobDescription(null)
         val ms = (System.nanoTime() - t0) / 1000000
-        pendingLineage += lineagePool.submit(new Runnable {
-          def run(): Unit = {
-            spark.sparkContext.setJobDescription(s"pipeline: lineage $name")
-            writeLineage(spark, runDir, runId, name, ch, written, ms)
-          }
-        })
-        counters().foreach { case (k, v) => writeCounter(spark, dir, k, v) }
+        writeLineageAsync(name, written, ms)
+        (("wall_ms" -> ms) +: counters(written)).foreach { case (k, v) => writeCounter(spark, dir, k, v) }
         markStage(spark, dir, ch)
         written
       }
@@ -788,7 +653,7 @@ object DedupPipeline {
     val bands = bandDf.as[BandRow]
 
     var droppedBuckets = 0L
-    val candDf = stage("05_cand", () => Seq("dropped_mega_buckets" -> droppedBuckets)) {
+    val candDf = stage("05_cand", _ => Seq("dropped_mega_buckets" -> droppedBuckets)) {
       val (pairs, dropped) = candidateStage(spark, bands, conf)
       droppedBuckets = dropped
       pairs.toDF()
@@ -798,9 +663,11 @@ object DedupPipeline {
     val embAcc = spark.sparkContext.longAccumulator("graft.verify.embNanos")
     val spanAcc = spark.sparkContext.longAccumulator("graft.verify.spanNanos")
     // summed task time of the per-text learners — the evidence behind the
-    // span/embedding budgets
-    def learnerMs = Seq("emb_wall_ms" -> embAcc.value / 1000000L, "span_wall_ms" -> spanAcc.value / 1000000L)
-    val verdictDf = stage("06_verdicts", () => learnerMs) {
+    // span/embedding budgets — and the budget's drop count
+    def verifyCounters(verdicts: DataFrame) =
+      Seq("emb_wall_ms" -> embAcc.value / 1000000L, "span_wall_ms" -> spanAcc.value / 1000000L) ++
+        conf.embMaxPairsPerDoc.map(_ => "emb_budget_dropped" -> embBudgetDrops(verdicts, conf))
+    val verdictDf = stage("06_verdicts", verifyCounters) {
       // repNorm, not the full norm: the span-text relations ship whole
       // through their SHUFFLE_HASH exchanges, so restricting them to
       // exact-group reps (187k of 450k rows at the scaling corpus) cuts
@@ -901,6 +768,7 @@ object DedupPipeline {
     val spanPairs = summary.getLong(8)
     val embMs = readCounter(spark, s"$runDir/06_verdicts", "emb_wall_ms")
     val spanMs = readCounter(spark, s"$runDir/06_verdicts", "span_wall_ms")
+    val embDropped = readCounter(spark, s"$runDir/06_verdicts", "emb_budget_dropped")
     val json =
       s"""{"run_id":"$runId","config_hash":"$confHash",
          |"total_pairs":${summary.getLong(0)},"duplicates":${summary.getLong(1)},
@@ -910,7 +778,7 @@ object DedupPipeline {
          |"clusters":$nClusters,"clustered_docs":$clustered,
          |"dropped_mega_buckets":$dropped,
          |"emb_pairs":$embPairs,"span_pairs":$spanPairs,
-         |"emb_wall_ms":$embMs,"span_wall_ms":$spanMs,
+         |"emb_wall_ms":$embMs,"span_wall_ms":$spanMs,"emb_budget_dropped":$embDropped,
          |"stages":$lineage}""".stripMargin.replace("\n", "")
     val f = fs(spark, runDir)
     val out = f.create(new Path(runDir, "metrics.json"), true)

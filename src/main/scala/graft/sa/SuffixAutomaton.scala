@@ -2,18 +2,19 @@ package graft.sa
 
 /** Longest common substring in O(|a| + |b|) via the suffix automaton of
   * `a` — the linear-time twin of the generalized-suffix-array pass
-  * (SuffixLCS), with identical exact semantics: SuffixAutomatonSpec
-  * asserts equality against the SA+LCP implementation on randomized,
-  * planted-span and unicode inputs.
+  * (SuffixLCS), with identical exact semantics: PropertySpec asserts
+  * equality against the SA+LCP implementation on randomized, planted-span
+  * and unicode inputs, and checks every `shared_span_len` the pipeline
+  * writes against it.
   *
   * Why it exists: at the 150k-page bench scale the prefix-doubling SA pass
   * measured 2,317s of the verify stage's ~2,730 core-seconds
   * (metrics.json `span_wall_ms` — ~85% of verify CPU, the pipeline's
   * single dominant cost). The automaton computes the same longest shared
   * span ~50x cheaper per pair: one O(n) build over the shorter text plus
-  * one O(m) stream of the longer, no sorting anywhere. The suffix-array
-  * implementation remains the specification/reference path
-  * (`DedupConfig.spanViaAutomaton = false`).
+  * one O(m) stream of the longer, no sorting anywhere. It is the
+  * pipeline's only span algorithm; the suffix-array implementation
+  * remains the specification and test oracle.
   *
   * Storage is flat primitive arrays with per-state adjacency lists (a
   * suffix automaton has < 2n states and < 3n transitions), reused across

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** DedupConfig.embMaxPairsPerDoc — the per-doc embedding budget (density
   * knob): a non-binding cap is exact parity with the default, a binding
-  * cap bounds embedded pairs per anchor with drops logged, and every label
-  * difference it introduces is on a pair whose embedding vote was dropped.
+  * cap bounds embedded pairs per anchor with drops counted in metrics.json,
+  * and every label difference it introduces is on a pair whose embedding
+  * vote was dropped.
   */
 class EmbBudgetSpec extends AnyFunSuite {
 
@@ -24,6 +25,12 @@ class EmbBudgetSpec extends AnyFunSuite {
       .map { case (k, a, l, c) => k -> ((a, l, c)) }.toMap
   }
 
+  /** The run's `emb_budget_dropped` counter, as metrics.json reports it. */
+  private def embDropped(tag: String): Long =
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(s"/tmp/graft_test_embb_$tag/metrics.json"))
+      .get("emb_budget_dropped").asLong()
+
   test("non-binding cap is exact parity; binding cap bounds and only flips emb-dropped pairs") {
     val off = runWith(DedupConfig.balanced, "off")
     val embOff = off.count(_._2._3.isDefined)
@@ -35,9 +42,9 @@ class EmbBudgetSpec extends AnyFunSuite {
     val zero = runWith(DedupConfig.balanced.copy(embMaxPairsPerDoc = Some(0)), "zero")
     assert(zero.keySet == off.keySet, "budget must not change the candidate/verdict pair set")
     assert(zero.count(_._2._3.isDefined) == 0, "cap=0 must embed nothing")
-    val dropped = spark.sparkContext.getLocalProperty("graft.pipeline.embBudgetDropped")
-    assert(dropped != null && dropped.toLong == embOff.toLong,
-      s"drop count must equal the default run's emb pairs: $dropped vs $embOff")
+    assert(embDropped("zero") == embOff.toLong,
+      s"drop count must equal the default run's emb pairs: ${embDropped("zero")} vs $embOff")
+    assert(embDropped("big") == 0 && embDropped("off") == 0)
     // On corpora where the emb vote is never decisive (cosines below the
     // 0.988 threshold) this set is empty — the invariant is conditional:
     // any flip must be on an emb-dropped pair and can only remove a dup.

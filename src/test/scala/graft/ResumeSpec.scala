@@ -104,6 +104,26 @@ class ResumeSpec extends AnyFunSuite {
     assert(counters(dirA) == a, "resumed run A must report the counters A's stages recorded")
   }
 
+  test("resume rebuilds a stage's lost lineage with the wall it recorded") {
+    val dir = "/tmp/graft_test_resume_lineage"
+    TestUtil.deleteRecursively(new File(dir))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def stageWalls: Map[String, Long] = {
+      val stages = mapper.readTree(new File(s"$dir/metrics.json")).get("stages")
+      (0 until stages.size()).map(i => stages.get(i))
+        .map(s => s.get("stage").asText() -> s.get("wall_ms").asLong()).toMap
+    }
+    DedupPipeline.run(spark, pagesDs, dir, DedupConfig.balanced, resume = true).count()
+    val walls = stageWalls
+    assert(walls.keySet == Set("01_norm", "02_reps", "03_sig", "04_bands", "05_cand", "06_verdicts", "07_clusters"))
+    // a crash between the stage marker and its async lineage write
+    TestUtil.deleteRecursively(new File(s"$dir/lineage/03_sig"))
+    val sigTimes = partMtimes(s"$dir/03_sig")
+    DedupPipeline.run(spark, pagesDs, dir, DedupConfig.balanced, resume = true).count()
+    assert(partMtimes(s"$dir/03_sig") == sigTimes, "03_sig was recomputed on resume")
+    assert(stageWalls == walls, "resumed metrics must list every stage with its recorded wall")
+  }
+
   test("config change invalidates stage outputs") {
     val dir = "/tmp/graft_test_resume_conf"
     TestUtil.deleteRecursively(new File(dir))
